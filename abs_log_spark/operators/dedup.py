@@ -131,13 +131,7 @@ def minhash_lsh_pairs(
         # third (skipped_out): persist the tiny (doc_id, band, bucket)
         # relation or every branch re-derives the signatures from shingles
         # (measured 1.5x the whole query). Same lifecycle as docs_sh.
-        # Persisted PRE-PARTITIONED on the bucket key: the count pre-pass
-        # and the member-list groupBy cluster on the same (band, bucket),
-        # so one repartition at persist time replaces the two groupBy
-        # exchanges both consumers would otherwise each pay (guide §2.4 —
-        # operations keyed the same way share one exchange; the cached
-        # HashPartitioning satisfies ClusteredDistribution downstream).
-        bb = _own_persist(bb.repartition("band", "bucket"), persisted_out)
+        bb = _own_persist(bb, persisted_out)
         if skipped_out is not None:
             skipped_out.append(oversized_buckets(bb, max_bucket_size))
     cand = candidate_pairs(bb, max_bucket_size)
@@ -210,10 +204,8 @@ def simhash_pairs(
     ).select("doc_id", "cb.band", "cb.bucket")
     if max_bucket_size is not None:
         # same as minhash: the count pre-pass is a second consumer of the
-        # chunk relation — persist it rather than re-exploding per branch,
-        # and pre-partition on the bucket key so both bucket groupBys run
-        # exchange-free off the cache (see minhash_lsh_pairs)
-        chunks = _own_persist(chunks.repartition("band", "bucket"), persisted_out)
+        # chunk relation — persist it rather than re-exploding per branch
+        chunks = _own_persist(chunks, persisted_out)
         if skipped_out is not None:
             skipped_out.append(oversized_buckets(chunks, max_bucket_size))
     cand = candidate_pairs(chunks, max_bucket_size)

@@ -16,6 +16,8 @@ crash between write and checkpoint append cannot duplicate rows.
 
 from __future__ import annotations
 
+from datetime import datetime, timezone
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from abs_log_spark.catalog import Catalog
@@ -92,8 +94,10 @@ def mark_done(
     if not partition_keys:
         return
     _heal(cat)  # never append-recreate a table stranded mid-retention-swap
-    rows = [(run_id, stage, str(k), "done") for k in partition_keys]
-    df = spark.createDataFrame(
-        rows, "run_id string, stage string, partition_key string, status string"
-    ).withColumn("ts", F.current_timestamp())
+    # the time travels as row data, not as current_timestamp(): the
+    # optimizer folds that into a long literal, which generated code
+    # inlines, so every run would compile a fresh class (codegen cache miss)
+    ts = datetime.now(timezone.utc)
+    rows = [(run_id, stage, str(k), "done", ts) for k in partition_keys]
+    df = spark.createDataFrame(rows, CHECKPOINT_SCHEMA)
     cat.append(df, CHECKPOINT_TABLE)

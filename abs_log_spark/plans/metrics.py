@@ -3,6 +3,8 @@
 Row counts are collected with ``DataFrame.observe`` — accumulator-style
 metrics piggybacking on the job's own actions, ZERO extra passes over the
 data (a ``df.count()`` audit at 10^12 rows would be a full extra scan).
+Generated-code compiles are read from the JVM's own counters, also with no
+Spark job.
 """
 
 from __future__ import annotations
@@ -16,15 +18,28 @@ from abs_log_spark.catalog import Catalog
 METRICS_TABLE = "metrics"
 
 
+def codegen_totals(spark: SparkSession) -> tuple[int, float]:
+    """(sources compiled, compile ms) by Spark's generated-code compiler in
+    this JVM so far: ``CodegenMetrics``' compile count and
+    ``CodeGenerator.compileTime``. Cache hits count in neither. Driver-side
+    counters, no Spark job; in local mode the executors share the driver's
+    JVM, so their compiles are included, on a cluster only the driver's."""
+    jvm = spark._jvm
+    compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    nanos = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
+    return int(compiles.getCount()), nanos / 1e6
+
+
 class StageMetrics:
     """Attach observation points to the flowing DataFrame, then persist the
     collected values once the terminal action has run."""
 
-    def __init__(self) -> None:
+    def __init__(self, spark: SparkSession) -> None:
         self.observations: dict[str, Observation] = {}
         self.t0 = time.monotonic()
         self.timings: dict[str, float] = {}
         self._last = self.t0
+        self._codegen0 = codegen_totals(spark)
 
     def mark(self, phase: str) -> None:
         """Record wall time since the previous mark under ``phase``."""
@@ -87,4 +102,8 @@ class StageMetrics:
         )
         cat.append(df, METRICS_TABLE)
         vals["timings"] = dict(self.timings)
+        # after the append, so the metrics write's own compiles count too
+        compiles, compile_ms = codegen_totals(spark)
+        vals["codegen_compiles"] = compiles - self._codegen0[0]
+        vals["codegen_compile_ms"] = round(compile_ms - self._codegen0[1], 1)
         return vals

@@ -71,6 +71,27 @@ ENGINE_CONFS: dict[str, str] = {
     # this conf alone; local[4] was unaffected because 4 oversized sorts
     # still fit). 32 MB compressed ~= 400 MB of rows per task.
     "spark.sql.files.maxPartitionBytes": "33554432",
+    # Generated-code class cache: an LRU keyed by the generated Java source,
+    # sized to the engine's working set. Spark's default of 100 is smaller
+    # than one pipeline run: perfbench pipeline_increment compiles ~160
+    # distinct sources (155-167 in its warm-up), so each warm op
+    # (incremental run + expiry + report views) cycled them through 100
+    # entries and recompiled 151-162, and the JIT then re-compiled every
+    # fresh class; curation_dup_clusters (94 sources) recompiled 21-50 per
+    # op. With 1000 a warm pipeline op compiles 0, and peak RSS did not
+    # move. A per-run literal inlined into generated code still misses
+    # every time (see checkpoint.mark_done). Static conf: only the JVM's
+    # first session applies it.
+    "spark.sql.codegen.cache.maxEntries": "1000",
+    # The key must not depend on plan numbering either. By default a
+    # whole-stage class is named after its codegen stage id, which AQE
+    # assigns in the order query stages finish re-planning, so the same
+    # pipeline can come back under another id and miss: with the cache
+    # alone, 8 whole-stage classes recompiled on 1 of 4 warm
+    # curation_dup_clusters ops. Without the id, warm ops compiled 0 and the
+    # warm-up 88 sources instead of 96. Cost: stack traces name
+    # "GeneratedIterator" with no stage number.
+    "spark.sql.codegen.useIdInClassName": "false",
     "spark.ui.enabled": "false",
     "spark.ui.showConsoleProgress": "false",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),

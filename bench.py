@@ -31,7 +31,8 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+#: cores this process may run on, unless SPARK_GRAFT_CPUS names a count
+CPUS = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
 
 #: bench pipeline input rows, scaled off the sf dir (sf0.1 -> 2M rows).
 PIPELINE_ROWS = {"sf0.001": 20_000, "sf0.01": 200_000, "sf0.1": 2_000_000}
