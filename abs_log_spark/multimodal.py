@@ -4,10 +4,9 @@ Images/audio/video ride through the engine as ``binary`` columns with a
 ``media_type`` tag; decode / feature-extraction runs as Arrow-batched
 ``mapInPandas`` so raw bytes never cross the Python boundary row-at-a-time.
 
-THIS CONTAINER HAS NO IMAGE/AUDIO LIBS: the actual decode is STUBBED — a
-deterministic fake feature extractor (byte length, md5, synthetic
-width/height/frame-count) plus a clearly-marked ``real_decode`` that raises
-NotImplementedError. The Spark-side plumbing — schema, Arrow batch shape,
+No image/audio libraries are a dependency: the actual decode is STUBBED —
+a deterministic fake feature extractor (byte length, md5, synthetic
+width/height/frame-count). The Spark-side plumbing — schema, Arrow batch shape,
 partitioning, UDF signature — is real and tested; swapping in PIL/ffmpeg
 is confined to ``_decode_stub``.
 
@@ -43,14 +42,6 @@ FEATURE_SCHEMA = StructType(
         StructField("n_frames", IntegerType()),
     ]
 )
-
-
-def real_decode(payload: bytes, media_type: str):
-    """Where PIL / torchaudio / ffmpeg would plug in."""
-    raise NotImplementedError(
-        "media decode libs are not available in this environment; "
-        "use the deterministic stub features instead"
-    )
 
 
 def _decode_stub(payload: bytes) -> tuple[int, int, int]:

@@ -28,7 +28,6 @@ from abs_log_spark.functions.similarity import (
     jaccard_from_arrays,
     minhash_signature_arr,
     oversized_buckets,
-    shingles_col,
     simhash_signature,
 )
 from abs_log_spark.functions.text import fingerprint_md5_col
@@ -218,14 +217,6 @@ def simhash_pairs(
         .where(F.col("hamming") <= max_hamming)
         .select("doc_a", "doc_b", "hamming")
     )
-
-
-def ngram_jaccard_pairs(
-    df: DataFrame, pairs: DataFrame, text_col: str = "text"
-) -> DataFrame:
-    """Exact n-gram Jaccard for an explicit candidate-pair set."""
-    docs_sh = df.select("doc_id", shingles_col(F.col(text_col)).alias("sh"))
-    return jaccard_from_arrays(pairs, docs_sh)
 
 
 def with_near_dup_copies(df: DataFrame, id_offset: int = 1_000_000, suffix: str = " zqx zqy zqz") -> DataFrame:

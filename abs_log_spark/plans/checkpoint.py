@@ -21,6 +21,7 @@ from datetime import datetime, timezone
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from abs_log_spark.catalog import Catalog
+from abs_log_spark.session import local_frame
 
 CHECKPOINT_TABLE = "checkpoint"
 CHECKPOINT_SCHEMA = (
@@ -77,10 +78,7 @@ def filter_pending(df: DataFrame, done: set[str], key_col: str = "part_bucket") 
     key = F.coalesce(F.col(key_col).cast("string"), F.lit("<null>"))
     if len(done) <= ISIN_MAX_KEYS:
         return df.where(~key.isin(*sorted(done)))
-    spark = df.sparkSession
-    done_df = spark.createDataFrame(
-        [(k,) for k in sorted(done)], "_done_key string"
-    )
+    done_df = local_frame(df.sparkSession, [(k,) for k in sorted(done)], "_done_key string")
     return df.join(F.broadcast(done_df), key == F.col("_done_key"), "left_anti")
 
 
@@ -99,5 +97,5 @@ def mark_done(
     # inlines, so every run would compile a fresh class (codegen cache miss)
     ts = datetime.now(timezone.utc)
     rows = [(run_id, stage, str(k), "done", ts) for k in partition_keys]
-    df = spark.createDataFrame(rows, CHECKPOINT_SCHEMA)
+    df = local_frame(spark, rows, CHECKPOINT_SCHEMA)
     cat.append(df, CHECKPOINT_TABLE)

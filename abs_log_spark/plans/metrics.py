@@ -14,6 +14,7 @@ import time
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from abs_log_spark.catalog import Catalog
+from abs_log_spark.session import local_frame
 
 METRICS_TABLE = "metrics"
 
@@ -95,7 +96,8 @@ class StageMetrics:
             as_long("rows_routed"),
             wall_ms,
         )
-        df = spark.createDataFrame(
+        df = local_frame(
+            spark,
             [row],
             "run_id string, stage string, partition_key string, rows_in long,"
             " rows_valid long, rows_invalid long, rows_routed long, wall_ms long",

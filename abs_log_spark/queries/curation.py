@@ -18,6 +18,7 @@ from abs_log_spark.operators.curation import (
 )
 from abs_log_spark.queries import register
 from abs_log_spark.queries.dedup import _MINHASH_CTES
+from abs_log_spark.session import local_frame
 from abs_log_spark.sources.readers import read_table
 
 _SAMPLE_SQL = """
@@ -39,7 +40,8 @@ def curation_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     # no spread: the sampling filter is a cheap map (one md5 per row) and
     # the per-source aggregate combines map-side — measured a wash at sf1.0
     docs = read_table(spark, sf_dir, "documents")
-    sources = docs.sparkSession.createDataFrame(
+    sources = local_frame(
+        spark,
         [(f"src{k}", 10 if k == 0 else 50) for k in range(20)],
         "source string, rate_pct int",
     )

@@ -10,6 +10,8 @@ merge) breaks value equality, not just row counts.
 
 from __future__ import annotations
 
+import glob
+import math
 import os
 import shutil
 import tempfile
@@ -36,13 +38,16 @@ def streaming_minute_agg_fb(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan's split unit, so the round-5 fixed 4-file/2-per-trigger layout
     capped each batch's Arrow-parse stage at 2 cores regardless of data
     size — now 2x the rebalanced sequences partition count, clamped to
-    [4, 16], always split into exactly TWO micro-batches (trigger =
-    half the files; merged output is batch-agnostic, oracle unchanged)."""
+    [4, 16], always split into exactly TWO micro-batches (trigger = half
+    the files the write actually produced, rounded up — an empty partition
+    writes no file, so the requested count can overstate it; merged output
+    is batch-agnostic, oracle unchanged)."""
     work = tempfile.mkdtemp(prefix="abslog_stream_q_")
     input_dir = os.path.join(work, "input")
     seq = sequences_from_documents(spark, sf_dir)
     n_files = max(4, min(16, 2 * seq.rdd.getNumPartitions()))
     seq.repartition(n_files).write.parquet(input_dir)
+    written = len(glob.glob(os.path.join(input_dir, "*.parquet")))
 
     cat = Catalog(root=os.path.join(work, "wh"))
     dim = gen_sources_dim(spark, n_sources=20)
@@ -53,7 +58,7 @@ def streaming_minute_agg_fb(spark: SparkSession, sf_dir: str) -> DataFrame:
         dim,
         checkpoint_dir=os.path.join(work, "ckpt"),
         cfg=PipelineConfig(),
-        max_files_per_trigger=n_files // 2,
+        max_files_per_trigger=math.ceil(written / 2),
     )
     q.awaitTermination()
 
@@ -75,9 +80,9 @@ def streaming_minute_agg_fb(spark: SparkSession, sf_dir: str) -> DataFrame:
         "err_hits",
         "invalid_hits",
     )
-    rows = out.collect()
+    table = out.toArrow()
     shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(rows, out.schema)
+    return spark.createDataFrame(table, out.schema)
 
 
 _SESSIONIZE_SQL = """
@@ -171,6 +176,6 @@ def streaming_windowed_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round("rt_max", 6).alias("rt_max"),
         "err_hits",
     )
-    rows = out.collect()
+    table = out.toArrow()
     shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(rows, out.schema)
+    return spark.createDataFrame(table, out.schema)

@@ -15,8 +15,13 @@ Scale rationale (100 TB / 1000-executor design, tested on local[32]):
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable
+from datetime import timezone
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType, StructType
 
 #: Confs applied to every session the engine creates. On a real cluster these
 #: land in spark-defaults; values chosen to survive a 100x scale-up:
@@ -121,3 +126,34 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def _arrow_column(values: tuple, arrow_type: pa.DataType) -> pa.Array:
+    if pa.types.is_timestamp(arrow_type):
+        # under an explicit tz type pyarrow keeps an aware datetime's wall
+        # clock and drops its offset: pin the instant to UTC first
+        values = [v.astimezone(timezone.utc) if v is not None and v.tzinfo else v for v in values]
+    return pa.array(values, type=arrow_type)
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[tuple], schema: str | StructType
+) -> DataFrame:
+    """A DataFrame over driver-held rows that plans as a ``LocalTableScan``.
+
+    ``spark.createDataFrame(list, schema)`` is a Python RDD (``Scan
+    ExistingRDD``): every action on it runs ``defaultParallelism`` Python
+    tasks, most of them empty, in a second Python worker daemon next to the
+    one the Arrow parse UDF uses. Built from a ``pyarrow.Table`` typed by the
+    same schema, the rows travel to the JVM once, an action runs no Python
+    task and a broadcast of the frame runs no Spark job. Timestamps are
+    instants: a tz-aware ``datetime`` keeps its instant, a naive one is read
+    as UTC (never as the host's local time)."""
+    struct = DataType.fromDDL(schema) if isinstance(schema, str) else schema
+    arrow_schema = to_arrow_schema(struct)
+    cols = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [_arrow_column(c, f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, struct)

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from abs_log_spark.functions.tokens import tokenize_col
+from abs_log_spark.session import local_frame
 
 N_SOURCES = 10
 SINK_OF = {0: "sink_a", 1: "sink_b", 2: "sink_c"}  # source k -> sink by k % 3
@@ -187,7 +188,7 @@ def gen_sources_dim(spark: SparkSession, n_sources: int = N_SOURCES) -> DataFram
         )
         for k in range(n_sources)
     ]
-    return spark.createDataFrame(rows, "source string, sink string, site string, region string")
+    return local_frame(spark, rows, "source string, sink string, site string, region string")
 
 
 def gen_documents(

@@ -447,3 +447,59 @@ def test_second_run_compiles_no_generated_code(spark, tmp_path):
     second = run_pipeline(spark, Catalog(root=str(tmp_path / "b")), seq, dim, run_id="b")
     assert first["rows_in"] == second["rows_in"] == N
     assert (second["codegen_compiles"], second["codegen_compile_ms"]) == (0, 0), second
+
+
+def test_local_rows_plan_as_local_table_scan(spark, tmp_catalog, monkeypatch):
+    """Driver-held rows (the sources dimension, checkpoint and metrics rows)
+    are built by ``local_frame``: the same rows and Spark schema as
+    ``createDataFrame(list, ddl)``, but planned as a LocalTableScan instead
+    of a Python RDD whose every action runs Python tasks. Checkpoint files
+    written the old way and the new way read back as one table."""
+    from datetime import datetime, timedelta, timezone
+
+    from abs_log_spark.catalog import Catalog
+    from abs_log_spark.plans.checkpoint import (
+        CHECKPOINT_SCHEMA,
+        CHECKPOINT_TABLE,
+        completed_partitions,
+        mark_done,
+    )
+    from abs_log_spark.session import local_frame
+
+    def executed_plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    ddl = "s string, n long, ts timestamp, k int"
+    rows = [
+        ("a", 2**40, datetime(2024, 1, 1, 3, tzinfo=timezone(timedelta(hours=5))), 1),
+        (None, None, None, None),
+        ("ü", -(2**33), datetime(2024, 1, 1, tzinfo=timezone.utc), 7),
+    ]
+    for sample in (rows, []):
+        want = spark.createDataFrame(sample, ddl)
+        got = local_frame(spark, sample, ddl)
+        assert got.schema == want.schema
+        assert got.collect() == want.collect()
+    assert "LocalTableScan" in executed_plan(local_frame(spark, rows, ddl))
+    assert "LocalTableScan" in executed_plan(gen_sources_dim(spark))
+
+    old = spark.createDataFrame(
+        [("old", "routed", "9", "done", datetime(2024, 1, 1, tzinfo=timezone.utc))],
+        CHECKPOINT_SCHEMA,
+    )
+    tmp_catalog.append(old, CHECKPOINT_TABLE)
+    appended = []
+    append = Catalog.append
+
+    def spy(self, df, table, *args, **kwargs):
+        appended.append((table, df))
+        return append(self, df, table, *args, **kwargs)
+
+    monkeypatch.setattr(Catalog, "append", spy)
+    mark_done(spark, tmp_catalog, "new", "routed", ["0", "1"])
+    [(table, done)] = appended
+    assert table == CHECKPOINT_TABLE
+    assert "LocalTableScan" in executed_plan(done)
+    assert done.schema == old.schema
+    assert tmp_catalog.read(spark, CHECKPOINT_TABLE).schema == old.schema
+    assert completed_partitions(spark, tmp_catalog, "routed") == {"0", "1", "9"}

@@ -3,7 +3,9 @@ into readStream must produce exactly the batch answers."""
 
 from __future__ import annotations
 
+import glob
 import math
+import os
 
 import pytest
 
@@ -89,7 +91,9 @@ def test_foreachbatch_partials_merge_to_batch_answer(spark, tmp_path, tmp_catalo
 
     partials = tmp_catalog.read(spark, "minute_agg_partials")
     n_batches = partials.select("batch_id").distinct().count()
-    assert n_batches >= 2, "multi-file input must produce multiple micro-batches"
+    n_files = len(glob.glob(os.path.join(input_dir, "*.parquet")))
+    assert n_files >= 2
+    assert n_batches == n_files, "one input file per trigger must give one micro-batch per file"
 
     merged = merge_stream_partials(partials)
     exact_cols = ["pv", "bytes_sum", "err_hits", "invalid_hits"]
